@@ -122,29 +122,36 @@ def pin_literal(df: DataFrame, max_rows: int) -> DataFrame:
 
 
 def pin_literal_with_rows(df: DataFrame, max_rows: int):
-    """:func:`pin_literal`, additionally returning the collected
-    pandas frame so callers can fold its values into literals (e.g. a
-    count census whose grand totals become ``lit`` ints). Returns
+    """:func:`pin_literal`, additionally returning the collected rows
+    as a pandas frame so callers can fold its values into literals (e.g.
+    a count census whose grand totals become ``lit`` ints). Returns
     ``(literal_df, pdf)`` on success, ``(pin(df), None)`` on any
     fallback — callers must keep a Spark-side derivation for the
-    ``None`` case."""
+    ``None`` case.
+
+    The rows travel as Arrow both ways (``toArrow`` then
+    ``createDataFrame(pa.Table)``) and ``pdf`` has Arrow-backed dtypes,
+    so values are exact: a pandas round trip would turn a nullable
+    bigint column into float64 and round 2^53+1 to 2^53."""
+    import pandas as pd
+
     spark = df.sparkSession
     try:
-        pdf = df.limit(max_rows + 1).toPandas()
+        tbl = df.limit(max_rows + 1).toArrow()
     except Exception:
         return pin(df), None
-    if len(pdf) > max_rows:
+    if tbl.num_rows > max_rows:
         return pin(df), None
     try:
-        out = spark.createDataFrame(pdf, schema=df.schema)
-        # Arrow-path createDataFrame(pandas) plans as LocalRelation;
-        # the list/RDD path plans as LogicalRDD, which has UNKNOWN
-        # size (defaults to huge) and would force sort-merge joins —
-        # worse than the checkpoint pin. Verify, else fall back.
+        out = spark.createDataFrame(tbl, schema=df.schema)
+        # createDataFrame(pa.Table) plans as LocalRelation; a list/RDD
+        # path would plan as LogicalRDD, which has UNKNOWN size
+        # (defaults to huge) and would force sort-merge joins — worse
+        # than the checkpoint pin. Verify, else fall back.
         plan = out._jdf.queryExecution().optimizedPlan().toString()
         if "LocalRelation" not in plan:
             return pin(df), None
-        return out, pdf
+        return out, tbl.to_pandas(types_mapper=pd.ArrowDtype)
     except Exception:
         return pin(df), None
 

@@ -47,13 +47,7 @@ from stockpy_spark.operators import (
     union_by_name,
 )
 from stockpy_spark.functions import strip_time_suffix
-from stockpy_spark.sources.testdata import read_events
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        return read_events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from stockpy_spark.sources.testdata import _t
 
 
 # --- flagship: the reference's richest query shape (transform_stocks

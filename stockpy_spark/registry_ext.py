@@ -56,13 +56,8 @@ from stockpy_spark.operators.multimodal import (
     extract_pixel_features,
 )
 from stockpy_spark.operators.similarity import ann_lsh_topk, brute_force_topk, ivf_topk
-from stockpy_spark.sources.testdata import read_events
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        return read_events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from stockpy_spark.sources.readers import read_parquet
+from stockpy_spark.sources.testdata import _t, read_events
 
 
 _STOP_SQL = "[" + ", ".join(f"'{w}'" for w in ENGLISH_STOPWORDS) + "]"
@@ -848,7 +843,7 @@ def q_er_fellegi_sunter(spark, sf_dir):
     hash-checked."""
     from stockpy_spark.operators.joins import fellegi_sunter_scores
 
-    parts = spark.read.parquet(f"{sf_dir}/part.parquet").select(
+    parts = _t(spark, sf_dir, "part").select(
         "p_partkey", "p_brand", "p_type", "p_size"
     )
     return fellegi_sunter_scores(
@@ -1672,7 +1667,7 @@ def q_feat_target_encode(spark, sf_dir):
     priorities = 25 distinct leak-free means at sf0.01)."""
     from stockpy_spark.operators.sampling import target_encode_oof
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = _t(spark, sf_dir, "orders")
     out = target_encode_oof(
         orders.select("o_orderkey", "o_orderpriority", "o_totalprice"),
         "o_orderpriority",
@@ -1873,7 +1868,7 @@ def q_privacy_k_anonymity(spark, sf_dir):
     anonymity set); one combination-count aggregate broadcast back."""
     from stockpy_spark.operators.privacy import k_anonymity_audit
 
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = _t(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", "c_mktsegment", "c_acctbal"
     )
     out = k_anonymity_audit(
@@ -1926,7 +1921,7 @@ def q_stats_spearman(spark, sf_dir):
     bit-identical cross-engine with no rounding tricks."""
     from stockpy_spark.operators.stats import spearman_corr_pairs
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = _t(spark, sf_dir, "lineitem")
     return spearman_corr_pairs(
         li, ["l_quantity", "l_extendedprice", "l_discount"]
     )
@@ -2279,7 +2274,8 @@ def q_sketch_cm_counts(spark, sf_dir):
     cross-partition invariance."""
     from stockpy_spark.operators.sketches import cm_sketch_estimates
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    # the raw file, without read_events' ts rebuild (only user_id is read)
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet")
     return cm_sketch_estimates(ev, "user_id", depth=4, width=64)
 
 

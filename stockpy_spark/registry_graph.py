@@ -14,7 +14,8 @@ from pyspark.sql import functions as F
 
 from stockpy_spark.operators.dedup import minhash_lsh_star_edges, word_jaccard_pairs
 from stockpy_spark.operators.graph import dedup_components
-from stockpy_spark.registry_ext import SQL_MINHASH_BSIG_CTES, SQL_WORD_JACCARD, _t
+from stockpy_spark.registry_ext import SQL_MINHASH_BSIG_CTES, SQL_WORD_JACCARD
+from stockpy_spark.sources.testdata import _t
 
 
 def q_graph_dedup_components(spark, sf_dir):

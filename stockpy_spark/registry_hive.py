@@ -31,6 +31,7 @@ from stockpy_spark.sources.hive_fixture import (
     ensure_events_by_day,
     run_incremental_cycle,
 )
+from stockpy_spark.sources.readers import read_parquet
 
 DAY = "20240115"
 RANGE_LO, RANGE_HI = "20240110", "20240112"
@@ -46,7 +47,7 @@ def q_hive_prune_day(spark, sf_dir):
     at 100 TB with years of partitions this is the difference between
     scanning ~1/1000th of the table and all of it."""
     path = ensure_events_by_day(spark, sf_dir)
-    day = spark.read.parquet(path).where(F.col("dataproc") == int(DAY))
+    day = read_parquet(spark, path).where(F.col("dataproc") == int(DAY))
     return day.groupBy("event_type").agg(
         F.count("*").cast("long").alias("n_events"),
         F.round(F.sum("value"), 6).alias("total_value"),
@@ -80,7 +81,7 @@ def q_hive_partition_counts(spark, sf_dir):
     test_hive_layout_externally_readable_by_duckdb, which builds the
     path dynamically."""
     path = ensure_events_by_day(spark, sf_dir)
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     return df.groupBy(F.col("dataproc").cast("long").alias("dataproc")).agg(
         F.count("*").cast("long").alias("n_events"),
         F.round(F.sum("value"), 6).alias("total_value"),
@@ -102,7 +103,7 @@ def q_hive_prune_range(spark, sf_dir):
     columns resolve at planning time), still oracle-checked against the
     flat table."""
     path = ensure_events_by_day(spark, sf_dir)
-    df = spark.read.parquet(path).where(
+    df = read_parquet(spark, path).where(
         (F.col("dataproc") >= int(RANGE_LO)) & (F.col("dataproc") <= int(RANGE_HI))
     )
     return df.groupBy(

@@ -48,7 +48,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from stockpy_spark.operators.pinning import pin, pin_literal
-from stockpy_spark.registry_ext import _STOP_SQL, _t
+from stockpy_spark.registry_ext import _STOP_SQL
+from stockpy_spark.sources.testdata import _t
 
 
 def q_pipeline_data_release(spark: SparkSession, sf_dir: str) -> DataFrame:

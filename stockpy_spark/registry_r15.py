@@ -17,7 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stockpy_spark.registry_ext import _BUCKET_SQL, _t
+from stockpy_spark.registry_ext import _BUCKET_SQL
+from stockpy_spark.sources.testdata import _t
 
 
 def q_pack_boundary_masks(spark: SparkSession, sf_dir: str) -> DataFrame:

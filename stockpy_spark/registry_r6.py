@@ -27,8 +27,8 @@ from stockpy_spark.registry_ext import (
     _STOP_SQL,
     _TOKENS_LOWER_SQL,
     _TOKENS_SQL,
-    _t,
 )
+from stockpy_spark.sources.testdata import _t
 
 
 # --- document chunking --------------------------------------------------

@@ -21,7 +21,8 @@ from pyspark.sql.window import Window
 from stockpy_spark.operators.filters import robust_clip_outliers
 from stockpy_spark.operators.similarity import kmeans_assign
 from stockpy_spark.operators.textstats import bm25_topk
-from stockpy_spark.registry_ext import _TOKENS_LOWER_SQL, _t
+from stockpy_spark.registry_ext import _TOKENS_LOWER_SQL
+from stockpy_spark.sources.testdata import _t
 
 
 # --- TPC-H Q2 shape: cheapest regional supplier per part -----------------

@@ -38,7 +38,8 @@ from stockpy_spark.operators.skyline import pareto_frontier_2d
 from stockpy_spark.operators.textcorpus import remove_frequent_lines
 from stockpy_spark.operators.textstats import build_inverted_index
 from stockpy_spark.operators.timeseries import gap_fill_linear, rolling_zscore
-from stockpy_spark.registry_ext import _TOKENS_LOWER_SQL, _t
+from stockpy_spark.registry_ext import _TOKENS_LOWER_SQL
+from stockpy_spark.sources.testdata import _t
 
 R6C_QUERIES: dict = {}
 

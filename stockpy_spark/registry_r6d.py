@@ -25,7 +25,7 @@ from stockpy_spark.operators.stats import (
     correlation_matrix,
 )
 from stockpy_spark.operators.timeseries import cusum_changepoint
-from stockpy_spark.registry_ext import _t
+from stockpy_spark.sources.testdata import _t
 
 R6D_QUERIES: dict = {}
 

@@ -19,7 +19,7 @@ from stockpy_spark.operators.stats import (
     mahalanobis_outliers_2d,
     welch_ttest,
 )
-from stockpy_spark.registry_ext import _t
+from stockpy_spark.sources.testdata import _t
 
 R6E_QUERIES: dict = {}
 

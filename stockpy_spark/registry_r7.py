@@ -21,7 +21,7 @@ from stockpy_spark.operators.multimodal import (
     attach_gif_anim_payload,
     extract_frame_features,
 )
-from stockpy_spark.registry_ext import _t
+from stockpy_spark.sources.testdata import _t
 from stockpy_spark.registry_r6b import _SQL_KMEANS_CTES
 
 

@@ -33,7 +33,8 @@ from pyspark.sql import functions as F
 
 from stockpy_spark.registry_ext import SQL_CM_SKETCH as SQL_STREAM_CM
 from stockpy_spark.registry_ext import SQL_MM_PIXELS as SQL_STREAM_BLOB
-from stockpy_spark.sources.testdata import read_events
+from stockpy_spark.sources.readers import read_parquet
+from stockpy_spark.sources.testdata import _t, read_events
 from stockpy_spark.streaming.ops import (
     dedup_within_watermark,
     read_upsert_log_final,
@@ -185,7 +186,7 @@ def q_stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
         .awaitTermination()
     )
-    sunk = spark.read.parquet(os.path.join(out, "sink"))
+    sunk = read_parquet(spark, os.path.join(out, "sink"))
     # the key set surfaces as a sorted comma-joined STRING, not
     # array<string>: the driver's pandas canonicalizer cannot sort list
     # cells (r06 row went red with "unhashable type: 'list'")
@@ -295,7 +296,7 @@ def q_stream_running_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
         .awaitTermination()
     )
-    sunk = spark.read.parquet(sink_dir)
+    sunk = read_parquet(spark, sink_dir)
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("key").orderBy(F.col("n").desc())
@@ -365,7 +366,7 @@ def q_stream_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
         .awaitTermination()
     )
-    sunk = spark.read.parquet(os.path.join(out, "sink"))
+    sunk = read_parquet(spark, os.path.join(out, "sink"))
     return sunk.groupBy("user_id").agg(
         F.count("*").cast("long").alias("n_pairs"),
         F.sum(F.unix_micros("p_ts") - F.unix_micros("v_ts"))
@@ -441,7 +442,7 @@ def q_stream_tws_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.conf.unset(provider_key)
         else:
             spark.conf.set(provider_key, prev)
-    sunk = spark.read.parquet(sink_dir)
+    sunk = read_parquet(spark, sink_dir)
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("key").orderBy(F.col("n").desc())
@@ -480,7 +481,7 @@ def q_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys=["user_id"],
         order_cols=["ts", "event_id"],
     )
-    cur = spark.read.parquet(table)
+    cur = read_parquet(spark, table)
     return cur.select(
         "user_id",
         F.unix_micros(F.col("ts").cast("timestamp")).alias("last_epoch_us"),
@@ -618,7 +619,7 @@ def q_stream_blob_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from stockpy_spark.streaming.ops import run_blob_shard_ingest
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = _t(spark, sf_dir, "documents").select("doc_id")
     assets = attach_bmp_payload(docs, "doc_id").select("doc_id", "payload")
     work = tempfile.mkdtemp(prefix="stockpy_stream_blob_")
     atexit.register(shutil.rmtree, work, ignore_errors=True)
@@ -674,7 +675,7 @@ def q_stream_minhash_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from stockpy_spark.streaming.ops import run_incremental_minhash_admitter
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where(
+    docs = _t(spark, sf_dir, "documents").where(
         F.col("text").isNotNull()
     )
     cols = ["doc_id", "lang", "n_chars", "text"]
@@ -921,7 +922,7 @@ def q_stream_shard_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from stockpy_spark.streaming.ops import run_incremental_shard_positions
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _t(spark, sf_dir, "documents")
     batch_all = docs.where(F.col("doc_id") % 5 == 0).select("doc_id")
     work = tempfile.mkdtemp(prefix="stockpy_stream_shardpos_")
     atexit.register(shutil.rmtree, work, ignore_errors=True)

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from stockpy_spark.operators import group_summary, semi_join, top_k
-from stockpy_spark.registry_core import _t
+from stockpy_spark.sources.testdata import _t
 
 
 def q_q7_volume_shipping(spark, sf_dir):

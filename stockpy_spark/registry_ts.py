@@ -12,7 +12,6 @@ counts nothing vs the O(n*m) reference semantics.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stockpy_spark.operators.multimodal import (
@@ -42,13 +41,7 @@ from stockpy_spark.sources.format_fixture import (
     events_from_json,
     events_from_orc,
 )
-from stockpy_spark.sources.testdata import read_events
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        return read_events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from stockpy_spark.sources.testdata import _t
 
 
 # --- rj1: value-banding range join (price bands) ------------------------

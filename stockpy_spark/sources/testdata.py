@@ -6,6 +6,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from stockpy_spark.sources.readers import read_parquet
+
+
 def _ts_unit_is_nanos(path: str) -> bool | None:
     """Sniff the parquet footer driver-side (pyarrow, ~ms) so we never
     launch a Spark job that PARQUET_TYPE_ILLEGAL will abort. None =
@@ -41,15 +44,15 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     nanos = _ts_unit_is_nanos(path)
     if nanos is None:
         try:
-            df = spark.read.parquet(path)
+            df = read_parquet(spark, path)
             if dict(df.dtypes).get("ts") == "timestamp":
                 return df
         except Exception:
             pass
     elif not nanos:
-        return spark.read.parquet(path)
+        return read_parquet(spark, path)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     if dict(df.dtypes).get("ts") == "timestamp":
         # INT96 columns: Arrow's footer schema reports them as nanos,
         # but Spark decodes them as real timestamps (nanosAsLong only
@@ -57,6 +60,14 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         return df
     # integer division — float division loses precision at ~1e18 ns
     return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+
+
+def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One test table of ``sf_dir`` by name; ``events`` gets
+    :func:`read_events`' timestamp-unit handling."""
+    if name == "events":
+        return read_events(spark, sf_dir)
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 TABLES = (
@@ -78,11 +89,7 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def load_tables(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
 ) -> dict[str, DataFrame]:
-    return {
-        t: read_events(spark, sf_dir) if t == "events"
-        else spark.read.parquet(f"{sf_dir}/{t}.parquet")
-        for t in names
-    }
+    return {t: _t(spark, sf_dir, t) for t in names}
 
 
 def register_views(

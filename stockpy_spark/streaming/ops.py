@@ -13,13 +13,18 @@ of batch ops:
 
 from __future__ import annotations
 
+import threading
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 from stockpy_spark.operators.pinning import pin
 
-
-from contextlib import contextmanager
+# Serializes fresh_stream_width's set/restore of the session-global
+# shuffle width: two interleaved windows would restore each other's
+# clamp and leave it in the session.
+_width_lock = threading.Lock()
 
 
 @contextmanager
@@ -40,14 +45,16 @@ def fresh_stream_width(spark: SparkSession, width: int | None = None):
     local-mode constant; callers whose state key cardinality warrants
     more width pass it explicitly. Resumed checkpoints are unaffected
     by construction, and the previous session value is restored on
-    exit (the started query keeps the width it captured)."""
+    exit (the started query keeps the width it captured). Concurrent
+    callers take turns, so each restores the value it found."""
     w = int(width or spark.sparkContext.defaultParallelism)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(w))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    with _width_lock:
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(w))
+        try:
+            yield
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def windowed_agg(

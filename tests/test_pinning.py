@@ -127,3 +127,19 @@ def test_pin_counts_gate_restores_lazy_contract(spark):
     a = {(r.doc, r.perplexity) for r in lazy_plan.collect()}
     b = {(r.doc, r.perplexity) for r in pinned.collect()}
     assert a == b
+
+
+def test_pin_literal_with_rows_is_exact_for_nullable_bigints(spark):
+    """A nullable bigint above 2^53 survives the driver round trip
+    exactly, in the literal frame and in the returned rows, and the
+    literal still plans as a LocalRelation."""
+    from stockpy_spark.operators.pinning import pin_literal_with_rows
+
+    big = 2**53 + 1
+    df = spark.createDataFrame([(big,), (None,), (3,)], "x bigint")
+    out, pdf = pin_literal_with_rows(df, 10)
+    assert pdf is not None
+    assert "LocalRelation" in out._jdf.queryExecution().optimizedPlan().toString()
+    assert sorted(r.x for r in out.collect() if r.x is not None) == [3, big]
+    assert int(pdf["x"].sum()) == big + 3
+    assert len(pdf) == 3

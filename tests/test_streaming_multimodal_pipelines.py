@@ -2477,3 +2477,37 @@ def test_palette_unique_matches_axis_unique():
         assert got_c.dtype == np.uint8
         assert np.array_equal(got_c, want_c)
         assert np.array_equal(np.asarray(got_i).ravel(), np.asarray(want_i).ravel())
+
+
+def test_fresh_stream_width_restores_under_concurrent_starts(spark):
+    """Two threads inside fresh_stream_width at once: once both have
+    left, the session's shuffle width is the value before either
+    entered, not one of the clamps. Unguarded, the second thread would
+    capture the first one's clamp and restore it after the first left."""
+    import threading
+
+    from stockpy_spark.streaming.ops import fresh_stream_width
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    a_in, b_in, a_out = threading.Event(), threading.Event(), threading.Event()
+
+    def first():
+        with fresh_stream_width(spark, 3):
+            a_in.set()
+            b_in.wait(0.5)  # times out when the second thread is held off
+        a_out.set()
+
+    def second():
+        a_in.wait(10)
+        with fresh_stream_width(spark, 5):
+            b_in.set()
+            a_out.wait(10)
+
+    threads = [threading.Thread(target=f) for f in (first, second)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(30)
+    assert not any(t.is_alive() for t in threads)
+    assert spark.conf.get(key) == before
