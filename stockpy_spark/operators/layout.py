@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from stockpy_spark.sources.readers import read_parquet
+
 
 def _bucket_rank(col: Column, cmin: Column, cmax: Column, bits: int) -> Column:
     """Scale col into [0, 2^bits) by its min/max. Constant columns
@@ -107,7 +109,7 @@ def measure_file_spans(
     global span — the data-skipping figure of merit (mean span ~1/n
     per dimension after Z-order vs ~1.0 for unsorted/other-sorted
     files). Reads footers via the `_metadata` file column group-by."""
-    df = spark.read.parquet(path).withColumn(
+    df = read_parquet(spark, path).withColumn(
         "__file", F.col("_metadata.file_path")
     )
     per_file = df.groupBy("__file").agg(

@@ -14,6 +14,8 @@ multi-executor cluster:
   byte-comparable against the DuckDB oracle and reproducible across hosts.
 - Arrow enabled for every pandas boundary (createDataFrame, toPandas,
   pandas UDFs).
+- A codegen cache large enough for every class the registry generates,
+  so a plan run again in the same session compiles nothing.
 """
 
 from __future__ import annotations
@@ -51,6 +53,18 @@ def spark_conf_defaults(cpus: int | None = None) -> dict[str, str]:
         # append-duplication bug, extract_stocks_job.py:375-393).
         "spark.sql.sources.partitionOverwriteMode": "dynamic",
         "spark.ui.enabled": "false",
+        # Janino compiles a generated class once while it stays in this
+        # LRU cache (~5 ms a class on 4 cores). Spark's default of 100
+        # entries is smaller than one pass of the engine's own plans,
+        # so each rerun of a plan recompiled all its classes. Working
+        # sets, counted with CodegenMetrics at sf0.01:
+        # pipeline_data_release 235-240 classes; a perfbench pass of
+        # sql_analytics 189, llm_curation 301, etl_daily_batch 122; the
+        # whole 257-query registry in one session 3541
+        # (tools/ledger_full.py re-measures it). 4096 holds the
+        # registry, and a repeated plan compiles nothing. Cost of the
+        # full registry held: +28 MB metaspace, +110 MB live heap.
+        "spark.sql.codegen.cache.maxEntries": "4096",
         # Auto-broadcast stays at Spark's 10MB default. Round 6 traced
         # q3/q18's chronic 3.2-3.6x 10x-scale ratios to an earlier 64MB
         # override: at sf1 it broadcast the FILTERED LINEITEM (97% of
@@ -75,6 +89,10 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a real
     cluster pass ``None`` after setting --master via spark-submit, or pass
     an explicit master URL.
+
+    Static confs (``spark.driver.memory``,
+    ``spark.sql.codegen.cache.maxEntries``) take effect only when this
+    call starts the JVM; on a live session ``getOrCreate`` keeps them.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))

@@ -188,7 +188,8 @@ def test_analyze_table_feeds_cbo_stats(spark, tmp_path):
 def test_session_defaults_scale_conscious(spark):
     """The conf contract the 100 TB design relies on: AQE with skew-join
     splitting and partition coalescing, dynamic partition overwrite,
-    parquet pushdown, UTC, Arrow."""
+    parquet pushdown, UTC, Arrow, and a codegen cache that holds the
+    registry's generated classes."""
     from stockpy_spark.session import spark_conf_defaults
 
     conf = spark_conf_defaults()
@@ -198,6 +199,7 @@ def test_session_defaults_scale_conscious(spark):
     assert conf["spark.sql.sources.partitionOverwriteMode"] == "dynamic"
     assert conf["spark.sql.parquet.filterPushdown"] == "true"
     assert conf["spark.sql.session.timeZone"] == "UTC"
+    assert conf["spark.sql.codegen.cache.maxEntries"] == "4096"
     # and the live test session actually carries them
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "dynamic"

@@ -272,6 +272,9 @@ def test_zorder_layout_tightens_all_dimensions(spark, tmp_path):
     )
     zs = measure_file_spans(spark, zpath, ["x", "y"]).collect()
     ss = measure_file_spans(spark, spath, ["x", "y"]).collect()
+    # a second measurement reads with the session's cached schema, and
+    # the `_metadata` file column still resolves
+    assert sorted(measure_file_spans(spark, zpath, ["x", "y"]).collect()) == sorted(zs)
     zx = sum(r.span_x for r in zs) / len(zs)
     zy = sum(r.span_y for r in zs) / len(zs)
     sx = sum(r.span_x for r in ss) / len(ss)
